@@ -22,12 +22,20 @@ This mirrors the reference corpus' exact-money model (Avro
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 __all__ = ["t", "m", "dsum", "davg", "o_m", "o_dsum", "o_davg", "md5_bucket", "ensure_parallelism", "local_df", "release_checkpoint", "revenue", "O_REVENUE", "centi_band", "o_centi_band", "bucketed_rank", "ntile_case"]
+
+
+_log = logging.getLogger(__name__)
+
+# failed release_checkpoint calls in this process: each one leaves its
+# blocks to the ContextCleaner (a later driver GC) instead of freeing them
+release_failures = 0
 
 
 def release_checkpoint(df: DataFrame) -> None:
@@ -51,8 +59,11 @@ def release_checkpoint(df: DataFrame) -> None:
     copy, so a later action on any plan over them fails with
     CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND rather than silently recomputing.
     Safe no-op for plans that read no checkpoint (unpersisting a
-    never-persisted RDD does nothing).
+    never-persisted RDD does nothing). A failure never fails the query:
+    it is counted in ``release_failures`` and the first one per process
+    is logged at WARNING.
     """
+    global release_failures
     try:
         plan = df._jdf.queryExecution().analyzed()
         leaves = plan.collectLeaves()
@@ -62,7 +73,13 @@ def release_checkpoint(df: DataFrame) -> None:
                 leaf.rdd().unpersist(False)
     except Exception:
         # best-effort: releasing storage must never fail a query
-        pass
+        release_failures += 1
+        if release_failures == 1:
+            _log.warning(
+                "release_checkpoint failed; its blocks stay until a driver GC "
+                "(further failures are only counted)",
+                exc_info=True,
+            )
 
 
 def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:

@@ -12,6 +12,14 @@ Design notes (100 TB target, tested on local[32]):
 - Broadcast threshold raised to 32 MB — dimension tables in the
   corpus (date_dim, item, store, ...) are all far below it, so every
   stream-static star join plan broadcasts (SURVEY.md §2.2).
+- Driver memory follows the host: min(16g, 60% of physical memory)
+  unless SPARK_GRAFT_DRIVER_MEM says otherwise. A flat 16g heap on a
+  15 GB host lets the JVM grow past what the machine has, with the
+  Python workers still to fit beside it.
+- Python workers fork from this package's daemon (``pyworker``), which
+  stops every task from re-reading the unchanged ``pyspark.zip``; the
+  package root rides the workers' PYTHONPATH so the daemon module is
+  importable from any working directory.
 """
 
 from __future__ import annotations
@@ -21,7 +29,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_session", "default_parallelism"]
+__all__ = ["get_session", "default_parallelism", "default_driver_memory"]
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_MAX_DRIVER_MB = 16 * 1024
 
 
 def default_parallelism() -> int:
@@ -29,6 +40,17 @@ def default_parallelism() -> int:
     if env:
         return int(env)
     return multiprocessing.cpu_count()
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for this host: min(16g, 60% of
+    ``MemTotal``), or 16g where ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, IndexError, ValueError):
+        return f"{_MAX_DRIVER_MB}m"
+    return f"{min(_MAX_DRIVER_MB, kb * 6 // 10 // 1024)}m"
 
 
 def get_session(app_name: str = "emr-datasources-spark", master: str | None = None) -> SparkSession:
@@ -44,7 +66,14 @@ def get_session(app_name: str = "emr-datasources-spark", master: str | None = No
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
+        # every Python task used to re-parse pyspark.zip's directory
+        # ~16 times (0.22-0.30 s) before doing any work; see pyworker
+        .config("spark.python.daemon.module", "aliyun_emapreduce_datasources_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         # A long-lived session that plans hundreds of distinct queries
         # (the bench sweep, a notebook day, a Thrift server) generates
         # thousands of codegen classes: the JVM's default 240 MB

@@ -25,10 +25,11 @@ of a JVM port:
                spread across shards, shards appearing between batches
                start from 0 (LoghubSource.scala:130-161 new-shard path).
 
-Read path yields ``pyarrow.RecordBatch`` (Arrow transfer, no per-row
-Python boxing); at scale each partition maps to one parquet row-group
-span / one shard slice, so parallelism follows the data layout exactly
-like the reference's split planners.
+The ``emrkv`` read path yields ``pyarrow.RecordBatch`` (Arrow
+transfer, no per-row Python boxing); ``emrlog`` yields one tuple per
+newline-terminated JSON line. At scale each partition maps to one
+parquet row-group span / one shard slice, so parallelism follows the
+data layout exactly like the reference's split planners.
 """
 
 from __future__ import annotations
@@ -288,8 +289,14 @@ def _list_shards(path: str) -> list[str]:
 
 
 def _shard_rows(path: str) -> int:
+    """Complete rows in a shard: newline-terminated lines only. A
+    writer may flush mid-line, and a trailing partial line becomes a
+    row only once its newline lands."""
+    n = 0
     with open(path, "rb") as fh:
-        return sum(1 for _ in fh)
+        for chunk in iter(lambda: fh.read(1 << 20), b""):
+            n += chunk.count(b"\n")
+    return n
 
 
 class LogShardStreamReader(DataSourceStreamReader):
@@ -387,7 +394,8 @@ class LogShardStreamReader(DataSourceStreamReader):
         import datetime
 
         fields = StructType.fromJson(json.loads(split.schema_json))
-        with open(split.path, "r", encoding="utf-8") as fh:
+        # split on "\n" only, the separator _shard_rows counts
+        with open(split.path, "r", encoding="utf-8", newline="\n") as fh:
             for i, line in enumerate(fh):
                 if i < split.start:
                     continue

@@ -22,7 +22,10 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
 from aliyun_emapreduce_datasources_spark.sources.pyds import (
+    LogShardStreamReader,
     compile_filters,
     register_all,
 )
@@ -195,6 +198,34 @@ def test_emrlog_append_resumes_from_cursor(spark, tmp_path):
         assert ks == list(range(10))
     finally:
         q.stop()
+
+
+def test_emrlog_unterminated_tail_is_offered_only_once_complete(tmp_path):
+    """A shard writer can flush mid-line. The half-written last line
+    must not count toward latestOffset (read() would json.loads it),
+    and once its newline lands it is read exactly once."""
+    d = str(tmp_path)
+    _write_shard(d, 0, 3)
+    tail = json.dumps({"k": 3, "v": "s0r3"})
+    with open(os.path.join(d, "shard-0.jsonl"), "a") as fh:
+        fh.write(tail[:7])
+    schema = StructType([StructField("k", LongType()), StructField("v", StringType())])
+    reader = LogShardStreamReader(schema, {"path": d})
+
+    def read(start, end):
+        return [row for split in reader.partitions(start, end) for row in reader.read(split)]
+
+    start = reader.latestOffset()  # first call: earliest
+    end = reader.latestOffset()
+    assert end == {"shard-0.jsonl": 3}
+    assert read(start, end) == [(i, f"s0r{i}") for i in range(3)]
+    assert reader.latestOffset() == end
+
+    with open(os.path.join(d, "shard-0.jsonl"), "a") as fh:
+        fh.write(tail[7:] + "\n")
+    end2 = reader.latestOffset()
+    assert end2 == {"shard-0.jsonl": 4}
+    assert read(end, end2) == [(3, "s0r3")]
 
 
 # --- emrkv write path (S4/S8/S23) ---------------------------------------

@@ -71,10 +71,10 @@ COMMENT = {
     "text_boilerplate_scrub": "Block extraction is an in-row expression before the Generate; the boilerplate set joins back as BroadcastHashJoin LeftAnti — the corpus never shuffles for membership; rebuild is one doc_id shuffle.",
     "trend_linear_fit": "Customer dim is BroadcastExchange; the five OLS moments fold into ONE partial+final HashAggregate pair on the segment key — the closed-form fit adds no shuffle beyond the aggregate.",
     "audit_column_profile": "One single-distinct aggregate per column, unioned — NO multi-distinct Expand (its 6x row replication measured 2.2x slower, r11 optimization round); every FileScan prunes to at most one column so total I/O equals the old single five-column scan, and n_rows rides a metadata-only count leg joined in as a 1-row broadcast.",
-    "graph_pagerank": "Graph materialized ONCE as a vertex-sized adjacency table (Scan ExistingRDD = localCheckpoint) — lineitem is not re-scanned per iteration; each iteration is one |V|-sized hash join (ranks x adjacency) + in-row explode + the edge-sized contribution aggregate, never nested-loop.",
+    "graph_pagerank": "Graph materialized ONCE as a vertex-sized adjacency table, persisted (InMemoryTableScan over the cached relation; lineage kept, so a lost block recomputes) — lineitem is not re-scanned per iteration; each iteration is one |V|-sized hash join (ranks x adjacency, broadcast while the adjacency fits the threshold) + in-row explode + the edge-sized contribution aggregate, never nested-loop.",
     "text_keyness_lift": "One corpus shuffle for (source, token) counts with map-side partials; per-source and per-token totals are Window sums over the vocabulary-sized aggregate; the grand total rides a 1-row BroadcastNestedLoopJoin; the per-source top-k compiles to WindowGroupLimit.",
     "events_ks_drift": "Raw events reduce with partial HashAggregate; the type list is a tiny BroadcastNestedLoopJoin onto the distinct-value grid; both CDFs are cumulative Window sums over the grid, never over raw events.",
-    "events_robust_outliers": "Events reduce once to the (type, centi-value) grid, materialized via localCheckpoint (Scan ExistingRDD — the median, MAD, and outlier branches never re-scan the corpus); weighted-median passes are Window cumulative sums over the grid; med/MAD tables come back as BroadcastHashJoin.",
+    "events_robust_outliers": "Events reduce once to the (type, centi-value) grid, persisted (InMemoryTableScan — the median, MAD, and outlier branches read the cached grid, never re-scan the corpus); weighted-median passes are Window cumulative sums over the grid; med/MAD tables come back as BroadcastHashJoin.",
     "dedup_containment": "Postings self-join is hash-equi on (source, shingle-hash); stop-shingle DF cut and pruned set sizes come from Window over the postings — no nested loop over doc pairs, worst case bounded by the MAX_DF cap.",
     "emb_kmeans_train": "Centroids flow as a broadcast one-row pack (BroadcastNestedLoopJoin of bytes), identical generated code every iteration; assignment arg-min is a per-vector window; update is one (cluster, dim) hashpartitioning Exchange.",
     "feature_matrix_pit": "Tagged spine+event union, ONE hashpartitioning Exchange on user_id; both features (running last-ignorenulls + 7-day RANGE count) ride the same Window pass — no spine-events join anywhere.",
@@ -96,7 +96,7 @@ COMMENT = {
     "eval_mrr_at_k": "Same block-cogroup kernel as emb_label_noise_knn (FlatMapCoGroupsInPandas over a broadcast grid); candidates entering the global first-hit window are bounded n.B.k; label totals join back broadcast-size.",
     "eval_kendall_tau": "Upper-triangle block grid via BroadcastHashJoin replication; each FlatMapCoGroupsInPandas task reduces its block pair to FIVE int64 scalars, so the post-kernel aggregate sees B² rows — pair volume never shuffles.",
     "events_rolling_wau": "Both range-join inputs are pre-aggregated (the deduped (user, day) pair table and its day spine); the non-equi window join is BroadcastNestedLoopJoin with the tiny spine broadcast; event-grain rows never pass an Exchange.",
-    "text_source_tv_matrix": "Per-source token counts reduce map-side once (localCheckpoint feeds totals, the pair spine, and both join sides); the common-token self-join is a shuffled equi join on token (SMJ — AQE may demote to shuffled-hash at runtime); totals ride BroadcastHashJoins; the TV fold is in-row integer arithmetic.",
+    "text_source_tv_matrix": "Per-source token counts reduce map-side once and are persisted (InMemoryTableScan — one cached table feeds totals, the pair spine, and both join sides); the common-token self-join is a hash equi join on token (BroadcastHashJoin while the count table is under the broadcast threshold, as at sf0.01; a shuffled SMJ above it); totals ride BroadcastHashJoins; the pair spine joins the common-token aggregate LEFT OUTER so pairs with no shared token still report; the TV fold is in-row integer arithmetic.",
     "text_vocab_coverage": "Corpus-sized explode reduces to the vocabulary with partial counts before its Exchange; the head is TakeOrderedAndProject (per-partition depth-max(k) heaps — the full vocab never sorts) and the rank Window spans those <= max(k) rows; |vocab| and total mass ride a 1-row broadcast; the ×3 cutoff fan-out is a BroadcastNestedLoopJoin of a 3-row table.",
     "pareto_revenue": "Distributed exact rank (round 7): customer-grain spend aggregate buckets by shiftright(spend,12); the only single-partition Window walks the occupied-bucket offset grid (price-bounded, not customer-bounded), which joins back as a BroadcastHashJoin; the raw-row row_number Window is partitioned per bucket and NTILE(10) is closed-form in-row arithmetic.",
     "text_stratified_filter": "Per-lang exact rank without a per-lang raw-row sort (round 7): quality buckets by floor(q*4096); per-(lang,bucket) counts reduce map-side; the offsets Window runs over the occupied-bucket grid only (null-safe broadcast join back — a NULL stratum must rank, not vanish); the sole raw-row Window is partitioned by (lang, _rb) — one 1/4096 quality slice of one stratum per task.",
